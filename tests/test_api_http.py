@@ -133,20 +133,17 @@ def test_validation_by_instance_option(server):
 
 
 def test_ratelimiter_reports_restart_semantics(server):
-    """PUT /ratelimiter documents its contract in the response: routes
-    with a live ControlDoc (start_dynamic) get the rate at their next
-    micro-batch (the reference's live RateLimiter swap,
+    """PUT /ratelimiter documents its contract in the response: every
+    started route carries a live ControlDoc and gets the rate at its
+    next micro-batch (the reference's live RateLimiter swap,
     RateLimiterResource.java:41-62; see test_dynamic.py for the
-    applied-live path); option-configured routes already running keep
-    their old rate until restarted from checkpoint. With no running
-    routes both lists are empty."""
+    applied-live path). With no running routes the list is empty."""
     code, out = _call(server, "PUT", "/ratelimiter?messagerate=250")
     assert code == 200
     assert out == {
         "rate": 250,
         "applied_to_new_routes": True,
         "applied_live_routes": [],
-        "running_routes_pending_restart": [],
     }
 
 

@@ -195,7 +195,6 @@ def test_engine_applies_rate_and_blacklist_live(spark, sf_dir, tmp_path):
         q.processAllAvailable()
         resp = eng.set_rate(5000)
         assert resp["applied_live_routes"] == [job.route.name]
-        assert resp["running_routes_pending_restart"] == []
         eng.blacklist_add("view")
         FX.records(spark, sf_dir).limit(200).coalesce(1).write.mode(
             "append"

@@ -44,7 +44,7 @@ def test_stream_count_preservation_and_transform(spark, record_dir, tmp_path):
     job = ReplicationJob(
         spark, _route(), checkpoint_dir=ckpt, source_kind="files", source_path=record_dir
     )
-    q = job.start(out, available_now=True)
+    q = job.start_dynamic(out, available_now=True)
     q.awaitTermination(120)
 
     src = spark.read.parquet(record_dir)
@@ -72,9 +72,9 @@ def test_stream_count_preservation_and_transform(spark, record_dir, tmp_path):
     # listener captured progress for the named route query
     spark.streams.resetTerminated()
     prog = mon.progress_df(spark)
-    assert prog.filter(F.col("query_name") == job.route.name).count() >= 1
+    assert prog.filter(F.col("query_name") == job.route.name + "-dynamic").count() >= 1
     total = (
-        prog.filter(F.col("query_name") == job.route.name)
+        prog.filter(F.col("query_name") == job.route.name + "-dynamic")
         .agg(F.sum("num_input_rows"))
         .collect()[0][0]
     )
@@ -90,14 +90,14 @@ def test_stream_resume_from_checkpoint(spark, record_dir, tmp_path):
     job = ReplicationJob(
         spark, _route(), checkpoint_dir=ckpt, source_kind="files", source_path=record_dir
     )
-    job.start(out, available_now=True).awaitTermination(120)
+    job.start_dynamic(out, available_now=True).awaitTermination(120)
     n1 = spark.read.parquet(out).count()
 
     # restart over the same (unchanged) source — nothing new to process
     job2 = ReplicationJob(
         spark, _route(), checkpoint_dir=ckpt, source_kind="files", source_path=record_dir
     )
-    job2.start(out, available_now=True).awaitTermination(120)
+    job2.start_dynamic(out, available_now=True).awaitTermination(120)
     n2 = spark.read.parquet(out).count()
     assert n2 == n1  # checkpoint prevented re-emission
 
@@ -107,7 +107,7 @@ def test_stream_resume_from_checkpoint(spark, record_dir, tmp_path):
     job3 = ReplicationJob(
         spark, _route(), checkpoint_dir=ckpt, source_kind="files", source_path=record_dir
     )
-    job3.start(out, available_now=True).awaitTermination(120)
+    job3.start_dynamic(out, available_now=True).awaitTermination(120)
     n3 = spark.read.parquet(out).count()
     assert n3 == n1 + 50
 
@@ -152,7 +152,7 @@ def test_rate_limited_triggers(spark, record_dir, tmp_path):
         spark, route, checkpoint_dir=str(tmp_path / "rl_ck"),
         source_kind="files", source_path=record_dir,
     )
-    job.start(out, available_now=True).awaitTermination(120)
+    job.start_dynamic(out, available_now=True).awaitTermination(120)
     src = spark.read.parquet(record_dir)
     assert spark.read.parquet(out).count() == src.count()
     spark.streams.resetTerminated()
@@ -165,7 +165,7 @@ def test_rate_limited_triggers(spark, record_dir, tmp_path):
     batches: list[int] = []
     for _ in range(40):
         prog = mon.progress_df(spark).filter(
-            (F.col("query_name") == route.name) & (F.col("num_input_rows") > 0)
+            (F.col("query_name") == route.name + "-dynamic") & (F.col("num_input_rows") > 0)
         )
         batches = [r.num_input_rows for r in prog.collect()]
         if len(batches) >= 4:
@@ -190,7 +190,7 @@ def test_custom_transform_hook(spark, record_dir, tmp_path):
             "dst_topic", F.lit("click_custom")
         ),
     )
-    job.start(out, available_now=True).awaitTermination(120)
+    job.start_dynamic(out, available_now=True).awaitTermination(120)
     src = spark.read.parquet(record_dir)
     dst = spark.read.parquet(out)
     assert dst.count() == src.filter(F.col("topic") == "click").count()
@@ -299,7 +299,7 @@ def test_two_routes_run_concurrently(spark, record_dir, tmp_path):
         )
         reg.add(job)
         jobs.append(job)
-    qs = [j.start(str(tmp_path / f"out{i}"), available_now=True) for i, j in enumerate(jobs)]
+    qs = [j.start_dynamic(str(tmp_path / f"out{i}"), available_now=True) for i, j in enumerate(jobs)]
     for q in qs:
         q.awaitTermination(120)
 
@@ -376,29 +376,45 @@ def test_run_bounded_kafka_branch_builds_reader_with_kwargs(
     assert n == src.filter((F.col("offset") >= 100) & (F.col("offset") < 400)).count()
 
 
+def _spy_batch_writer(monkeypatch) -> list[dict]:
+    """Spy on the batch DataFrameWriter behind the Kafka write step:
+    each ``save()`` records its format, options, columns and rows, and
+    collects instead of producing (there is no broker here). The
+    collect is a full pass, so the sink's row Observation completes
+    exactly as on a real write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    writes: list[dict] = []
+
+    def format_spy(self, source):
+        self.spied = {"format": source, "options": {}}
+        return self
+
+    def options_spy(self, **opts):
+        self.spied["options"].update(opts)
+        return self
+
+    def save_spy(self, *a, **k):
+        writes.append(
+            {**self.spied, "cols": list(self._df.columns), "rows": self._df.collect()}
+        )
+
+    monkeypatch.setattr(DataFrameWriter, "format", format_spy)
+    monkeypatch.setattr(DataFrameWriter, "options", options_spy)
+    monkeypatch.setattr(DataFrameWriter, "save", save_spy)
+    return writes
+
+
 def test_start_kafka_ordering_contract(spark, record_dir, tmp_path, monkeypatch):
     """T2: start_kafka(preserve_order=True) must emit the reference's
     ordering options verbatim (ProducerThread.java:84-88) and an
-    explicit partition column so the sink honors the remap."""
+    explicit partition column so the sink honors the remap. The route's
+    handler runs on a static batch; the query itself never starts."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     from ureplicator_spark.sources import kafka as K
 
-    captured = {}
-    orig_format = DataStreamWriter.format
-    orig_options = DataStreamWriter.options
-
-    def format_spy(self, source):
-        captured["format"] = source
-        captured["cols"] = list(self._df.columns)
-        return orig_format(self, source)
-
-    def options_spy(self, **opts):
-        captured.setdefault("options", {}).update(opts)
-        return orig_options(self, **opts)
-
-    monkeypatch.setattr(DataStreamWriter, "format", format_spy)
-    monkeypatch.setattr(DataStreamWriter, "options", options_spy)
+    writes = _spy_batch_writer(monkeypatch)
     monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **k: None)
 
     job = ReplicationJob(
@@ -406,15 +422,91 @@ def test_start_kafka_ordering_contract(spark, record_dir, tmp_path, monkeypatch)
         source_kind="files", source_path=record_dir,
     )
     job.start_kafka(preserve_order=True)
+    batch = spark.read.parquet(record_dir)
+    job.dynamic_sink(batch, 0)
 
+    (captured,) = writes
     assert captured["format"] == "kafka"
     assert captured["cols"] == ["topic", "partition", "key", "value"]
+    assert len(captured["rows"]) == batch.count()
     expected = K.sink_options("", preserve_order=True)
     assert expected["kafka.max.in.flight.requests.per.connection"] == "1"
     assert expected["kafka.acks"] == "all"
     assert int(expected["kafka.retries"]) == 2**31 - 1
     for k_, v in expected.items():
         assert captured["options"][k_] == v, k_
+
+
+@pytest.mark.parametrize("kind", ["parquet", "archive", "archive_once", "kafka"])
+def test_every_route_obeys_live_control(spark, sf_dir, tmp_path, monkeypatch, kind):
+    """Every sink runs through the live-controlled DynamicSink: a
+    blacklist and a topic override set on the route's ControlDoc AFTER
+    it starts apply at the next batch, same runId (T4/T9 for archive,
+    effectively-once archive and Kafka routes, not only parquet)."""
+    from collections import Counter
+
+    from ureplicator_spark.sources.archive import read_archive
+
+    src = str(tmp_path / "records")
+    FX.records(spark, sf_dir).limit(200).coalesce(1).write.parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    job = ReplicationJob(
+        spark, _route(), checkpoint_dir=ckpt, source_kind="files", source_path=src
+    )
+    writes = _spy_batch_writer(monkeypatch) if kind == "kafka" else []
+    start = {
+        "parquet": lambda: job.start_dynamic(out),
+        "archive": lambda: job.start_archive(out),
+        "archive_once": lambda: job.start_archive_effectively_once(out),
+        "kafka": job.start_kafka,
+    }[kind]
+
+    def landed() -> Counter:
+        """Destination topic → rows landed so far."""
+        if kind == "kafka":
+            return Counter(r.topic for w in writes for r in w["rows"])
+        if kind == "parquet":
+            df = spark.read.parquet(out).withColumnRenamed("dst_topic", "t")
+        else:
+            df = read_archive(spark, out).withColumnRenamed("topic", "t")
+        return Counter({r.t: r["count"] for r in df.groupBy("t").count().collect()})
+
+    q = start()
+    try:
+        q.processAllAvailable()
+        assert job.control is not None and job.dynamic_sink is not None
+        assert job.control.path == f"{ckpt}/control.json"
+        run_id = q.runId
+        before = landed()
+
+        job.control.set_blacklist(["view"])
+        job.control.set_topics({"click": "click_live"}, {"click_live": 16})
+        n0 = len(job.dynamic_sink.log)
+        # fresh record identities, so the upsert sink appends them too
+        FX.records(spark, sf_dir).limit(300).withColumn(
+            "offset", F.col("offset") + 10**9
+        ).coalesce(1).write.mode("append").parquet(src)
+        q.processAllAvailable()
+
+        fed = spark.read.parquet(src).filter(F.col("offset") >= 10**9)
+        want = Counter(
+            {
+                ("click_live" if r.topic == "click" else r.topic): r["count"]
+                for r in fed.filter(F.col("topic") != "view")
+                .groupBy("topic").count().collect()
+            }
+        )
+        assert landed() - before == want
+        new = job.dynamic_sink.log[n0:]
+        assert new and all(
+            b["blacklist"] == ["view"] and b["live_topology"] for b in new
+        )
+        assert sum(b["rows_in"] for b in new) == 300
+        assert sum(b["rows_written"] for b in new) == sum(want.values())
+        assert q.runId == run_id and q.isActive
+    finally:
+        q.stop()
 
 
 def test_compact_survives_racing_compactor(spark, record_dir, tmp_path, monkeypatch):

@@ -208,37 +208,26 @@ class Engine:
             }
 
     # -- rate limiting (PUT /ratelimiter) -----------------------------------
-    def set_rate(self, records_per_trigger: int) -> dict:
-        """Set the replication rate for all routes, matching the
+    def set_rate(self, records_per_sec: int) -> dict:
+        """Set the replication rate (records/s) for all routes — the
         reference's live Guava RateLimiter swap
-        (RateLimiterResource.java:41-62, FetcherManager.java:101-123)
-        wherever it can be matched:
-
-        * Routes started with ``start_dynamic`` carry a live
-          ``ControlDoc`` — the new rate is written there and the
-          running query applies it at its NEXT micro-batch, no restart
-          (``applied_live_routes``).
-        * Option-configured routes (``maxOffsetsPerTrigger`` /
-          ``maxFilesPerTrigger``) read their options at query START:
-          the new rate applies to routes created afterwards, while
-          running ones keep the old rate until restarted from
-          checkpoint (``running_routes_pending_restart``)."""
+        (RateLimiterResource.java:41-62, FetcherManager.java:101-123).
+        Every started route carries a live ``ControlDoc``: the new rate
+        is written there and the running query applies it at its NEXT
+        micro-batch, no restart (``applied_live_routes``). Routes
+        created afterwards by ``create_route`` start with it."""
         with self._mutex:
-            self._rate = records_per_trigger
-            pending, live = [], []
+            self._rate = records_per_sec
+            live = []
             for job in self.routes.jobs.values():
-                job.route.max_records_per_trigger = records_per_trigger
                 if job.control is not None:
-                    job.control.set_rate(records_per_trigger)
+                    job.control.set_rate(records_per_sec)
                     if job.query is not None and job.query.isActive:
                         live.append(job.route.name)
-                elif job.query is not None and job.query.isActive:
-                    pending.append(job.route.name)
             return {
-                "rate": records_per_trigger,
+                "rate": records_per_sec,
                 "applied_to_new_routes": True,
                 "applied_live_routes": sorted(live),
-                "running_routes_pending_restart": sorted(pending),
             }
 
     # -- blacklist (GET/POST/DELETE /blacklist) ------------------------------

@@ -242,10 +242,8 @@ class _Handler(BaseHTTPRequestHandler):
             return 200, {"unblacklisted": parts[1]}
         if key == ("PUT", "ratelimiter"):
             # Reference applies the new rate to a LIVE RateLimiter
-            # (RateLimiterResource.java:41-62). Dynamic routes (live
-            # ControlDoc) match that: next micro-batch, no restart.
-            # Option-configured routes read options at start and are
-            # listed as pending-restart (Engine.set_rate docstring).
+            # (RateLimiterResource.java:41-62); every route's ControlDoc
+            # matches that: next micro-batch, no restart.
             return 200, eng.set_rate(int(q["messagerate"]))
         return None
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ureplicator_spark.functions import values_df
+
 
 def replicate_transform(
     records: DataFrame,
@@ -78,6 +80,30 @@ def replicate_transform(
         F.when(F.col(ts_col) <= 0, F.lit(None).cast("long")).otherwise(F.col(ts_col)),
     )
     return out
+
+
+def replicate_from_tables(
+    records: DataFrame,
+    topic_mapping: dict[str, str],
+    partition_counts: dict[str, int],
+) -> DataFrame:
+    """``replicate_transform`` with its two dims given as plain dicts
+    (a route's static tables or a control document's live override),
+    each built as a tiny ``VALUES`` LocalRelation."""
+    spark = records.sparkSession
+    return replicate_transform(
+        records,
+        values_df(
+            spark,
+            list(topic_mapping.items()) or [("", "")],
+            "src_topic string, dst_topic string",
+        ),
+        values_df(
+            spark,
+            list(partition_counts.items()) or [("", 0)],
+            "topic string, num_partitions int",
+        ),
+    )
 
 
 def bounded_filter(

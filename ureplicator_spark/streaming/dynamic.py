@@ -1,18 +1,15 @@
 """Live control plane for RUNNING replication streams — rate changes,
 topic blacklist edits, and topic add/remove without stopping the query.
 
-Reference behavior this mirrors (the two SURVEY "accepted gaps" this
-module closes):
+Reference behavior this mirrors:
 
 * **T4 live rate** — a PUT to the worker applies the new rate to a
   LIVE Guava RateLimiter; in-flight fetchers see it at their next
   ``acquire`` (uReplicator-Worker/.../RateLimiterResource.java:41-62,
-  FetcherManager.java:101-123). Before this module the engine applied
-  a new rate only to routes started afterwards (restart semantics).
+  FetcherManager.java:101-123).
 * **T9 non-stop topology** — the fetcher thread reconciles pending
   partition add/delete maps into the running fetch loop between polls,
-  never stopping it (ConsumerFetcherThread.java:183-206). Before this
-  module the engine restarted from checkpoint.
+  never stopping it (ConsumerFetcherThread.java:183-206).
 
 Spark-first translation: a Structured Streaming query's *source
 options* are immutable after start, but the DRIVER runs arbitrary code
@@ -52,9 +49,12 @@ import json
 import os
 import threading
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ureplicator_spark.operators.replicate import replicate_from_tables
 
 
 class ControlDoc:
@@ -113,15 +113,18 @@ class ControlDoc:
 
 
 class DynamicSink:
-    """``foreachBatch`` handler enforcing the live control document.
+    """The ``foreachBatch`` handler of every ``ReplicationJob`` route,
+    enforcing the live control document.
 
     Per micro-batch: read the doc, filter blacklisted source topics,
     apply the replicate transform with the doc's CURRENT topic mapping
     and partition counts (falling back to the route's static tables
-    when the doc has no override), append the batch to the parquet
-    sink, then throttle so sustained throughput stays ≤
+    when the doc has no override), hand the result to the route's
+    ``write`` step (parquet append, archive append or upsert, Kafka
+    produce), then throttle so sustained throughput stays ≤
     ``records_per_sec``. Row counts ride the write job via
-    ``Observation`` (no second pass over the batch).
+    ``Observation`` (no second pass over the batch), so ``write`` must
+    run at least one action that reads every row of its input.
 
     Applying the transform batch-side (instead of once in the
     streaming plan) is what makes the TOPOLOGY live: a runtime topic
@@ -144,10 +147,14 @@ class DynamicSink:
     instead of racing wall clocks."""
 
     def __init__(
-        self, control: ControlDoc, out_path: str, route=None, transform=None
+        self,
+        control: ControlDoc,
+        write: Callable[[DataFrame], None],
+        route,
+        transform=None,
     ) -> None:
         self.control = control
-        self.out_path = out_path
+        self.write = write
         self.route = route
         self.transform = transform
         self.log: list[dict] = []
@@ -156,31 +163,13 @@ class DynamicSink:
     def _apply_transform(self, batch_df: DataFrame, doc: dict) -> DataFrame:
         if self.transform is not None:  # P5 hook: caller-owned semantics
             return self.transform(batch_df)
-        if self.route is None:
-            return batch_df
-        from ureplicator_spark.functions import values_df
-        from ureplicator_spark.operators.replicate import replicate_transform
-
-        spark = batch_df.sparkSession
         mapping = doc.get("topic_mapping")
         if mapping is None:
             mapping = self.route.topic_mapping
         counts = doc.get("partition_counts")
         if counts is None:
             counts = self.route.partition_counts
-        return replicate_transform(
-            batch_df,
-            values_df(
-                spark,
-                list(mapping.items()) or [("", "")],
-                "src_topic string, dst_topic string",
-            ),
-            values_df(
-                spark,
-                list(counts.items()) or [("", 0)],
-                "topic string, num_partitions int",
-            ),
-        )
+        return replicate_from_tables(batch_df, mapping, counts)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
@@ -198,8 +187,7 @@ class DynamicSink:
             out = out.filter(~F.col("topic").isin(blacklist))
         out = self._apply_transform(out, doc)
         obs_out = Observation()
-        out = out.observe(obs_out, F.count(F.lit(1)).alias("n"))
-        out.write.mode("append").parquet(self.out_path)
+        self.write(out.observe(obs_out, F.count(F.lit(1)).alias("n")))
         rows_in = int(obs_in.get["n"])
         rows_written = int(obs_out.get["n"])
 

@@ -2,22 +2,30 @@
 Streaming query (SURVEY.md §3.1, component map §7).
 
 Reference lifecycle collapsed:
-  WorkerInstance.start (WorkerInstance.java:100-139)   → job.start()
+  WorkerInstance.start (WorkerInstance.java:100-139)   → job.start_dynamic()
+    / start_archive() / start_archive_effectively_once() / start_kafka()
   Fetcher/Producer thread pipeline + bounded queues    → micro-batch
     execution (built-in backpressure, T5)
   DefaultMessageTransformer                             → replicate_transform
   ZookeeperCheckpointManager commit-after-flush (T1)   → checkpointLocation
     offset WAL + commit log per micro-batch (at-least-once)
   offset.commit.interval.ms (T3)                        → trigger interval
-  RateLimiter (T4)                                      → maxOffsetsPerTrigger
+  RateLimiter (T4)                                      → live ControlDoc
+    rate (``streaming/dynamic.py``)
   bounded replication (T10, WorkerInstance.java:189-206)→ batch read with
     ending offsets
+
+Every ``start_*`` method runs the same pipeline: one ``foreachBatch``
+query whose handler is a :class:`~ureplicator_spark.streaming.dynamic.DynamicSink`
+(live control doc → blacklist → transform → row counts → write step →
+throttle). The sinks differ only in the write step they pass.
 
 Source kinds:
   * ``kafka``  — production path (needs the Kafka connector jar).
   * ``files``  — parquet-dir stream of Kafka-record-shaped rows; used
-    by tests and by any replay-from-archive deployment. Same schema,
-    same transform, same checkpoint semantics.
+    by tests and by any replay-from-archive deployment. Either kind
+    feeds any sink: same record view, same per-batch handler, same
+    checkpoint semantics.
 """
 
 from __future__ import annotations
@@ -28,10 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ureplicator_spark.functions import values_df
-from ureplicator_spark.operators.replicate import bounded_filter, replicate_transform
+from ureplicator_spark.operators.replicate import bounded_filter, replicate_from_tables
 from ureplicator_spark.session import tune
 from ureplicator_spark.sources import kafka as K
+from ureplicator_spark.streaming.dynamic import ControlDoc, DynamicSink
 
 
 @dataclass
@@ -43,7 +51,7 @@ class Route:
     route_id: int = 0
     topic_mapping: dict[str, str] = field(default_factory=dict)
     partition_counts: dict[str, int] = field(default_factory=dict)
-    max_records_per_trigger: int | None = None  # T4 rate limit (kafka source)
+    max_records_per_trigger: int | None = None  # T5 per-batch intake (kafka source)
     max_files_per_trigger: int = 8  # T4/T5 analog for the files source
     trigger_interval: str | None = None  # T3 commit cadence
 
@@ -81,7 +89,7 @@ class ReplicationJob:
         self.topics = topics
         self.transform = transform
         self.query: StreamingQuery | None = None
-        self.control = None  # live ControlDoc when started via start_dynamic
+        self.control = None  # live ControlDoc, set when the route starts
         self.dynamic_sink = None
 
     # -- source ------------------------------------------------------------
@@ -119,32 +127,23 @@ class ReplicationJob:
             return reader.parquet(self.source_path)
         raise ValueError(f"unknown source kind {self.source_kind!r}")
 
-    # -- transform ---------------------------------------------------------
-    def _transform(self, df: DataFrame) -> DataFrame:
-        if self.transform is not None:  # P5 pluggable transformer
-            return self.transform(df)
-        mapping = values_df(
-            self.spark,
-            list(self.route.topic_mapping.items()) or [("", "")],
-            "src_topic string, dst_topic string",
-        )
-        counts = values_df(
-            self.spark,
-            list(self.route.partition_counts.items()) or [("", 0)],
-            "topic string, num_partitions int",
-        )
-        return replicate_transform(df, mapping, counts)
-
     # -- sinks -------------------------------------------------------------
-    def start(self, out_path: str, available_now: bool = False) -> StreamingQuery:
-        """Streaming replication to a parquet sink (tests/archive) —
-        checkpointed, at-least-once, per-micro-batch commit (T1/T3)."""
-        out = self._transform(self._source())
+    def _run(
+        self, write, suffix: str, available_now: bool, control=None
+    ) -> StreamingQuery:
+        """Start the route: one ``foreachBatch`` query whose handler is
+        a ``DynamicSink`` over ``write`` — checkpointed, at-least-once,
+        per-micro-batch commit (T1/T3), steered live by ``control``
+        (default: ``control.json`` in the checkpoint directory)."""
+        self.control = control or ControlDoc(f"{self.checkpoint_dir}/control.json")
+        self.dynamic_sink = DynamicSink(
+            self.control, write, self.route, transform=self.transform
+        )
         writer = (
-            out.writeStream.format("parquet")
-            .option("path", out_path)
+            self._source()
+            .writeStream.foreachBatch(self.dynamic_sink)
             .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name)
+            .queryName(self.route.name + suffix)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
@@ -154,79 +153,52 @@ class ReplicationJob:
         return self.query
 
     def start_dynamic(
-        self, out_path: str, control, available_now: bool = False
+        self, out_path: str, control=None, available_now: bool = False
     ) -> StreamingQuery:
-        """Streaming replication under a LIVE control document — rate,
-        blacklist, topic-mapping and partition-count changes apply at
-        the next micro-batch with no restart (T4 live rate,
+        """Streaming replication into a parquet directory (plain batch
+        appends) under a LIVE control document — rate, blacklist,
+        topic-mapping and partition-count changes apply at the next
+        micro-batch with no restart (T4 live rate,
         RateLimiterResource.java:41-62; T9 non-stop topology,
         ConsumerFetcherThread.java:183-206; see
-        ``streaming/dynamic.py``). The replicate transform runs
-        BATCH-side in the sink (rebuilt from the doc per batch) rather
-        than once in the streaming plan — that is what makes the
-        topology live. ``control`` is a ``dynamic.ControlDoc``; the
-        per-batch decision log is ``job.dynamic_sink.log``."""
-        from ureplicator_spark.streaming.dynamic import DynamicSink
+        ``streaming/dynamic.py``). ``control`` is a
+        ``dynamic.ControlDoc``; the per-batch decision log is
+        ``job.dynamic_sink.log``."""
 
-        self.control = control
-        self.dynamic_sink = DynamicSink(
-            control, out_path, route=self.route, transform=self.transform
-        )
-        out = self._source()
-        writer = (
-            out.writeStream.foreachBatch(self.dynamic_sink)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name + "-dynamic")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        def _append(out: DataFrame) -> None:
+            out.write.mode("append").parquet(out_path)
+
+        return self._run(_append, "-dynamic", available_now, control)
 
     def start_archive(self, root: str, available_now: bool = False) -> StreamingQuery:
         """Streaming replication into the partitioned record archive
         (``sources/archive.py`` layout: topic=<dst>/dt=<day>/) — the
         retention-independent replay store.
 
-        Deliberately ``foreachBatch`` + plain batch appends, NOT the
-        native streaming file sink: the file sink's ``_spark_metadata``
-        manifest is the reader's source of truth, so any external
-        rewrite (``compact_archive``) breaks every subsequent read
-        with FileNotFound. A manifest-free directory keeps the archive
+        Deliberately plain batch appends, NOT the native streaming file
+        sink: the file sink's ``_spark_metadata`` manifest is the
+        reader's source of truth, so any external rewrite
+        (``compact_archive``) breaks every subsequent read with
+        FileNotFound. A manifest-free directory keeps the archive
         compactable and readable by any engine; delivery downgrades
         from exactly-once to at-least-once per micro-batch — the SAME
         guarantee the reference offers end-to-end (T1: commit after
         flush, ProducerThread.java:172-188), and replays are idempotent
         downstream because records carry (topic, partition, offset)."""
-        from pyspark.sql import functions as F
 
-        out = self._transform(self._source()).select(
-            F.col("dst_topic").alias("topic"),
-            F.col("dst_partition").alias("partition"),
-            "offset",
-            "ts_sec",
-            "value_size",
-            "value",
-            "props",
-            F.to_date(F.timestamp_seconds("ts_sec")).alias("dt"),
-        )
+        def _append(out: DataFrame) -> None:
+            out.select(
+                F.col("dst_topic").alias("topic"),
+                F.col("dst_partition").alias("partition"),
+                "offset",
+                "ts_sec",
+                "value_size",
+                "value",
+                "props",
+                F.to_date(F.timestamp_seconds("ts_sec")).alias("dt"),
+            ).write.mode("append").partitionBy("topic", "dt").parquet(root)
 
-        def _append(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("append").partitionBy("topic", "dt").parquet(root)
-
-        writer = (
-            out.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name + "-archive")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        return self._run(_append, "-archive", available_now)
 
     def start_archive_effectively_once(
         self, root: str, available_now: bool = False
@@ -255,27 +227,18 @@ class ReplicationJob:
         across source partitions (and null for round-robin topics),
         so it cannot key an upsert; it stays derivable from the
         route's partition counts."""
-        from pyspark.sql import functions as F
-
         from ureplicator_spark.sources.archive import upsert_archive, write_archive
 
-        out = self._transform(self._source()).select(
-            F.col("dst_topic").alias("topic"),
-            F.col("partition"),
-            "offset",
-            "ts_sec",
-            "value_size",
-            "value",
-            "props",
-        )
-
-        def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
-            # an empty micro-batch (normal before data arrives) must
-            # write NOTHING: write_archive(empty) would leave a
-            # _SUCCESS-only root that every later parquet read crashes
-            # on (UNABLE_TO_INFER_SCHEMA), wedging the stream forever.
-            if batch_df.isEmpty():
-                return
+        def _upsert(out: DataFrame) -> None:
+            batch_df = out.select(
+                F.col("dst_topic").alias("topic"),
+                F.col("partition"),
+                "offset",
+                "ts_sec",
+                "value_size",
+                "value",
+                "props",
+            )
             spark = batch_df.sparkSession
             jvm = spark.sparkContext._jvm
             conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -287,21 +250,20 @@ class ReplicationJob:
                 fs.globStatus(Path(f"{root}/topic=*"))
             ) > 0
             if has_data:
+                # an empty batch touches no (topic, dt) partition and
+                # writes nothing
                 upsert_archive(spark, root, batch_df)
-            else:
+            elif batch_df.count() > 0:
+                # an empty micro-batch (normal before data arrives, or
+                # fully blacklisted) must write NOTHING: write_archive
+                # (empty) would leave a _SUCCESS-only root that every
+                # later parquet read crashes on (UNABLE_TO_INFER_SCHEMA),
+                # wedging the stream forever. A full count, not
+                # isEmpty(): the sink's row Observation completes on the
+                # first action over the batch and must see every row.
                 write_archive(batch_df, root)
 
-        writer = (
-            out.writeStream.foreachBatch(_upsert)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name + "-archive-once")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        return self._run(_upsert, "-archive-once", available_now)
 
     def start_kafka(self, preserve_order: bool = True) -> StreamingQuery:
         """Streaming replication into the destination Kafka cluster with
@@ -311,34 +273,32 @@ class ReplicationJob:
         replayed into Kafka have no key column) and coerces non-Kafka
         value types to string; real Kafka sources pass binary through
         untouched."""
-        out = self._transform(self._source())
-        key_col = (
-            F.col("key")
-            if "key" in out.columns
-            else F.lit(None).cast("binary").alias("key")
-        )
-        value_type = out.schema["value"].dataType.simpleString()
-        value_col = (
-            F.col("value")
-            if value_type in ("string", "binary")
-            else F.col("value").cast("string").alias("value")
-        )
-        out = out.select(
-            F.col("dst_topic").alias("topic"),
-            F.col("dst_partition").alias("partition"),
-            key_col,
-            value_col,
-        )
-        writer = (
-            out.writeStream.format("kafka")
-            .options(**K.sink_options(self.bootstrap_servers or "", preserve_order))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name)
-        )
-        if self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+
+        def _produce(out: DataFrame) -> None:
+            key_col = (
+                F.col("key")
+                if "key" in out.columns
+                else F.lit(None).cast("binary").alias("key")
+            )
+            value_type = out.schema["value"].dataType.simpleString()
+            value_col = (
+                F.col("value")
+                if value_type in ("string", "binary")
+                else F.col("value").cast("string").alias("value")
+            )
+            (
+                out.select(
+                    F.col("dst_topic").alias("topic"),
+                    F.col("dst_partition").alias("partition"),
+                    key_col,
+                    value_col,
+                )
+                .write.format("kafka")
+                .options(**K.sink_options(self.bootstrap_servers or "", preserve_order))
+                .save()
+            )
+
+        return self._run(_produce, "", available_now=False)
 
     # -- bounded mode (T10) -------------------------------------------------
     def run_bounded(
@@ -366,7 +326,13 @@ class ReplicationJob:
                 )
                 .load()
             )
-        out = self._transform(bounded_filter(src, start_offset, end_offset))
+        out = bounded_filter(src, start_offset, end_offset)
+        if self.transform is not None:  # P5 pluggable transformer
+            out = self.transform(out)
+        else:
+            out = replicate_from_tables(
+                out, self.route.topic_mapping, self.route.partition_counts
+            )
         obs = Observation()
         out = out.observe(obs, F.count(F.lit(1)).alias("n_written"))
         out.write.mode("append").parquet(out_path)
